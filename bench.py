@@ -28,9 +28,10 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
 
-    from kgc.session import get_spark
+    from kgc.session import codegen_compile_count, get_spark
 
     spark = get_spark(app_name=f"kgc-bench-sf{sf}", cpus=cpus)
+    compiles_at_start = codegen_compile_count(spark)
     timings: dict[str, float] = {}
 
     def timed(name: str, fn):
@@ -181,6 +182,9 @@ def main() -> None:
     total = round(
         sum(v for k, v in timings.items() if not k.startswith("pipeline_stage_")), 3
     )
+    # a count, not a time (kept out of total_sec): classes compiled over the
+    # run — a codegen cache smaller than the working set shows as a jump here
+    timings["codegen_compiles"] = float(codegen_compile_count(spark) - compiles_at_start)
     print(
         json.dumps(
             {

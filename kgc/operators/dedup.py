@@ -182,6 +182,32 @@ def banded_candidates(bk: DataFrame, max_bucket: int | None = None) -> DataFrame
     )
 
 
+# Broadcast cap for minhash_banded_pairs' verify join, in shingle_table_bytes
+# units. Measured on the sf0.1 driver `documents` table (5,000 docs of ~300
+# chars; the input of bench.py's dd_jaccard_pairs and curate_e2e): estimate
+# 7.1 MB (≈1.4 KB/doc), built broadcast relation 8.4 MB (×1.18), one build
+# that both join sides share (ReusedExchange). So 40 MB builds ≈47 MB:
+# ≈29k docs of that shape, fewer of longer ones — a doc-count cut cannot
+# see document length.
+VERIFY_BROADCAST_BYTES = 40 << 20
+
+
+def shingle_table_bytes(sh: DataFrame) -> int:
+    """UnsafeRow bytes of a doc_shingles() table — what a broadcast of it
+    holds before hash-relation overhead. Per row: the null-bit word, the id
+    and the array's offset/size (8 bytes each; a string id's own bytes are
+    not counted); per array: the element count, its null-bit words, one
+    offset/size word per shingle, and each shingle padded to 8 bytes. One
+    job over the (materialized) table, like a count()."""
+    row = (
+        F.lit(32)
+        + F.expr("8 * ((size(sh) + 63) div 64)")
+        + F.size("sh") * 8
+        + F.expr("aggregate(sh, 0L, (acc, s) -> acc + 8 * ((octet_length(s) + 7) div 8))")
+    )
+    return sh.select(F.sum(row)).first()[0] or 0
+
+
 def minhash_banded_pairs(
     docs: DataFrame,
     bands: int = 8,
@@ -220,13 +246,13 @@ def minhash_banded_pairs(
     cand = banded_candidates(minhash_band_keys(sh, bands, rows, agg_shape=True), max_bucket)
     sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # guide §3.1 (r6): below ~50k docs the shingle table (≈3 KB/doc → tens
-    # of MB built) broadcasts into the verify join instead of the planner's
-    # default sort-merge (a localCheckpoint reports default-huge stats),
-    # which shuffled + sorted the CANDIDATE pair table twice just to attach
-    # shingle arrays. Above the threshold the sort-merge shape stands — at
-    # corpus scale the shingle table is the big side and must shuffle.
-    if sh.count() <= 50_000:
+    # guide §3.1 (r6): a shingle table up to VERIFY_BROADCAST_BYTES
+    # broadcasts into the verify join instead of the planner's default
+    # sort-merge (a localCheckpoint reports default-huge stats), which
+    # shuffled + sorted the CANDIDATE pair table twice just to attach
+    # shingle arrays. Above the cap the sort-merge shape stands — at corpus
+    # scale the shingle table is the big side and must shuffle.
+    if shingle_table_bytes(sh) <= VERIFY_BROADCAST_BYTES:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter

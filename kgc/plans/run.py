@@ -134,6 +134,17 @@ _STAGE_META_POOL = _TPE(max_workers=1, thread_name_prefix="kgc-stage-meta")
 _STAGE_RUN_POOL = _TPE(max_workers=1, thread_name_prefix="kgc-stage-run")
 
 
+def _settle(futs: list) -> None:
+    """Wait on every future, swallowing its error — on a failure path the
+    error being re-raised is the primary one. Iterates the live list, so a
+    future appended meanwhile (a concurrent stage's finalize) is seen."""
+    for f in futs:
+        try:
+            f.result()
+        except Exception:  # noqa: BLE001
+            pass
+
+
 def run_pipeline(
     spark: SparkSession,
     workdir: str,
@@ -178,26 +189,31 @@ def run_pipeline(
     catalog_df = alias_catalog(spark, sf)
     part_of = part_of_dim(spark)
 
-    # Deferred stage-finalize futures (see _stage) — joined before EVERY
-    # return so a completed run_pipeline always leaves manifests on disk.
+    # Futures of the stages run beside the main thread, and of every stage's
+    # deferred finalize (see _stage). Joined before EVERY return, so a
+    # completed run_pipeline always leaves manifests on disk; settled before
+    # a failure is re-raised, so the caller never sees a stage mid-write or
+    # a finished upstream stage without its manifest.
+    concurrent: list = []
     deferred: list = []
 
     def _join_deferred() -> None:
         for f in deferred:
             f.result()
 
-    # §2.6 overlap: canonicalize depends only on the (range-derived) alias
-    # catalog, not on any document stage — run it from a driver thread so
-    # its tasks fill executor capacity the doc chain's stage tails leave
-    # idle. Job descriptions/locality are thread-local; stage dirs are
-    # disjoint; stage_sec dict writes are per-key. Exceptions surface at
-    # .result().
-    fut_canon = _STAGE_RUN_POOL.submit(
-        _stage, spark, workdir, "canonicalize", fp,
-        lambda: entities_canon_map(salted_dedup(alias_edges(catalog_df), ["src", "dst"])),
-        None, force, stage_sec, deferred,
-    )
     try:
+        # §2.6 overlap: canonicalize depends only on the (range-derived) alias
+        # catalog, not on any document stage — run it from a driver thread so
+        # its tasks fill executor capacity the doc chain's stage tails leave
+        # idle. Job descriptions/locality are thread-local; stage dirs are
+        # disjoint; stage_sec dict writes are per-key. Exceptions surface at
+        # .result().
+        fut_canon = _STAGE_RUN_POOL.submit(
+            _stage, spark, workdir, "canonicalize", fp,
+            lambda: entities_canon_map(salted_dedup(alias_edges(catalog_df), ["src", "dst"])),
+            None, force, stage_sec, deferred,
+        )
+        concurrent.append(fut_canon)
         docs_df = _stage(
             spark, workdir, "ingest", fp,
             (lambda: docs) if docs is not None else (lambda: synth_documents(spark, sf)),
@@ -213,102 +229,90 @@ def run_pipeline(
             lambda: link_mentions(mentions_to_long(mentions), catalog_df),
             bucket_by="doc_id", force=force, timings=stage_sec, deferred=deferred,
         )
-    finally:
-        # surface the doc-chain error only after the concurrent stage has
-        # settled (never leave a stage mid-write when the caller sees a
-        # failure from this function)
-        canon_exc = None
-        try:
-            canon_map = fut_canon.result()
-        except Exception as e:  # noqa: BLE001 — re-raised below when primary path succeeds
-            canon_exc = e
-    if canon_exc is not None:
-        raise canon_exc
-    triples = _stage(
-        spark, workdir, "triples", fp,
-        lambda: canonical_triples(assemble_triples(linked), canon_map),
-        bucket_by="subj", force=force, timings=stage_sec, deferred=deferred,
-    )
-    tables = {
-        "documents": docs_df,
-        "mentions": mentions,
-        "linked": linked,
-        "entities_canon": canon_map,
-        "triples": triples,
-    }
-    if until == "triples":
-        _join_deferred()
-        return tables
+        canon_map = fut_canon.result()
+        triples = _stage(
+            spark, workdir, "triples", fp,
+            lambda: canonical_triples(assemble_triples(linked), canon_map),
+            bucket_by="subj", force=force, timings=stage_sec, deferred=deferred,
+        )
+        tables = {
+            "documents": docs_df,
+            "mentions": mentions,
+            "linked": linked,
+            "entities_canon": canon_map,
+            "triples": triples,
+        }
+        if until == "triples":
+            _join_deferred()
+            return tables
 
-    # §2.6 overlap: attribute and similarity both depend only on `triples`
-    # — run attribute from the pool while the (heavier) similarity stage
-    # builds on the main thread.
-    fut_attr = _STAGE_RUN_POOL.submit(
-        _stage, spark, workdir, "attribute", fp,
-        lambda: attribute(triples, part_of),
-        None, force, stage_sec, deferred,
-    )
+        # §2.6 overlap: attribute and similarity both depend only on `triples`
+        # — run attribute from the pool while the (heavier) similarity stage
+        # builds on the main thread.
+        fut_attr = _STAGE_RUN_POOL.submit(
+            _stage, spark, workdir, "attribute", fp,
+            lambda: attribute(triples, part_of),
+            None, force, stage_sec, deferred,
+        )
+        concurrent.append(fut_attr)
 
-    def build_similar():
-        # exact: blocked self-join (blocking key = activity) — the
-        # GraphGist's own co-touch semantics, P/R gate target. lsh: the
-        # banded candidate generator (10^12-scale path for the kNN
-        # consumer; recall tuned for similarity >= 0.5 pairs). Decided
-        # INSIDE the stage builder so a manifest resume skips the
-        # degree-histogram action along with the stage itself.
-        # touch_items is a full dedup SHUFFLE of the touch stream — pay it
-        # ONCE (localCheckpoint) and share across the predict probe, the
-        # stop-list, and the chosen path's own consumers.
-        t_sel = time.time()
-        items = touch_items(triples).localCheckpoint(eager=True)
-        mode, predicted = sim_mode, None
-        if mode == "auto":
-            mode, predicted = select_similarity_mode(triples, sim_pair_threshold, items=items)
-            stage_sec["similarity_select"] = round(time.time() - t_sel, 3)
-            print(
-                f"[kgc] similarity auto-select: predicted {predicted:.4g} exact "
-                f"candidate pairs (threshold {sim_pair_threshold:.4g}) → {mode}"
-            )
-        if info is not None:
-            info["sim_mode"] = mode
-            info["sim_predicted_pairs"] = predicted
-        if mode == "lsh":
-            stop = hot_activities(items)
-            return candidate_pairs_lsh(triples, stoplist=stop, items=items)
-        # dict_encode: the Σdeg² pair shuffle carries 8-byte codes instead of
-        # id strings — measured 18.4s → 10.5s on the sf0.1 similarity stage;
-        # output pinned bit-equal to the plain path (tests/test_ops_core.py)
-        return similar_to_exact(triples, dict_encode=True, items=items)
+        def build_similar():
+            # exact: blocked self-join (blocking key = activity) — the
+            # GraphGist's own co-touch semantics, P/R gate target. lsh: the
+            # banded candidate generator (10^12-scale path for the kNN
+            # consumer; recall tuned for similarity >= 0.5 pairs). Decided
+            # INSIDE the stage builder so a manifest resume skips the
+            # degree-histogram action along with the stage itself.
+            # touch_items is a full dedup SHUFFLE of the touch stream — pay it
+            # ONCE (localCheckpoint) and share across the predict probe, the
+            # stop-list, and the chosen path's own consumers.
+            t_sel = time.time()
+            items = touch_items(triples).localCheckpoint(eager=True)
+            mode, predicted = sim_mode, None
+            if mode == "auto":
+                mode, predicted = select_similarity_mode(triples, sim_pair_threshold, items=items)
+                stage_sec["similarity_select"] = round(time.time() - t_sel, 3)
+                print(
+                    f"[kgc] similarity auto-select: predicted {predicted:.4g} exact "
+                    f"candidate pairs (threshold {sim_pair_threshold:.4g}) → {mode}"
+                )
+            if info is not None:
+                info["sim_mode"] = mode
+                info["sim_predicted_pairs"] = predicted
+            if mode == "lsh":
+                stop = hot_activities(items)
+                return candidate_pairs_lsh(triples, stoplist=stop, items=items)
+            # dict_encode: the Σdeg² pair shuffle carries 8-byte codes instead of
+            # id strings — measured 18.4s → 10.5s on the sf0.1 similarity stage;
+            # output pinned bit-equal to the plain path (tests/test_ops_core.py)
+            return similar_to_exact(triples, dict_encode=True, items=items)
 
-    # bucket_by="ind_a" (r6): AQE coalescing can legally shrink the pair
-    # table to ONE output file (decode-join exchange ~20 MB), and a 1-file
-    # table serializes every downstream scan — recommend's map-side
-    # WindowGroupLimit then sorts the whole symmetrized stream in one task
-    # (measured 2.2 s → 4.6 s). The bucketed write repartitions 1:1 over
-    # n_buckets writers, restoring scan parallelism for every consumer.
-    try:
+        # bucket_by="ind_a" (r6): AQE coalescing can legally shrink the pair
+        # table to ONE output file (decode-join exchange ~20 MB), and a 1-file
+        # table serializes every downstream scan — recommend's map-side
+        # WindowGroupLimit then sorts the whole symmetrized stream in one task
+        # (measured 2.2 s → 4.6 s). The bucketed write repartitions 1:1 over
+        # n_buckets writers, restoring scan parallelism for every consumer.
         similar = _stage(
             spark, workdir, "similarity", fp, build_similar,
             bucket_by="ind_a", force=force, timings=stage_sec, deferred=deferred,
         )
-    finally:
-        attr_exc = None
-        try:
-            attributions = fut_attr.result()
-        except Exception as e:  # noqa: BLE001 — re-raised when the primary path succeeds
-            attr_exc = e
-    if attr_exc is not None:
-        raise attr_exc
-    recs = _stage(
-        spark, workdir, "recommend", fp,
-        lambda: recommend(triples, similar),
-        force=force, timings=stage_sec, deferred=deferred,
-    )
-    tables.update(
-        {"attributions": attributions, "similar_to": similar, "recommendations": recs}
-    )
-    _join_deferred()
-    return tables
+        attributions = fut_attr.result()
+        recs = _stage(
+            spark, workdir, "recommend", fp,
+            lambda: recommend(triples, similar),
+            force=force, timings=stage_sec, deferred=deferred,
+        )
+        tables.update(
+            {"attributions": attributions, "similar_to": similar, "recommendations": recs}
+        )
+        _join_deferred()
+        return tables
+    except BaseException:
+        # concurrent stages first: each appends its own finalize to deferred
+        _settle(concurrent)
+        _settle(deferred)
+        raise
 
 
 def build_triples_fused(spark: SparkSession, sf: float, canon_map: DataFrame | None = None) -> DataFrame:

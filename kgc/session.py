@@ -9,6 +9,8 @@ configs, not code:
 - shuffle.partitions sized ~2× local cores; on a 1000-executor cluster the
   documented formula is max(2 × totalCores, input_bytes / 128MB).
 - UTC session TZ so timestamps round-trip exactly against the DuckDB oracle.
+- Codegen class cache sized to the engine's working set, so warm calls
+  reuse their generated classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -72,15 +74,21 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        # FAIR job scheduling (guide §2.6): run_pipeline/run_curation submit
-        # independent stages + deferred finalize scans from driver threads;
-        # under FIFO a short concurrent stage (canonicalize, 2.4 s of work)
-        # queues behind the doc chain's stages and tails for 9-14 s of
-        # shared-capacity wall. FAIR interleaves the concurrent jobs:
-        # measured sf0.1 warm e2e 29.5-29.9 s → 25.9-27.8 s AND the
-        # overlapped stages' own walls halve. Sections that run one job at
-        # a time behave exactly as FIFO. Overridable via KGC_CONF.
-        .config("spark.scheduler.mode", "FAIR")
+        # Codegen class cache (static conf: CodeGenerator sizes its LRU once
+        # per JVM, at first use, so only the builder can set it). Spark's
+        # default of 100 is below this engine's working sets, and a working
+        # set above the cap evicts cyclically: every warm call recompiles
+        # every class. Measured on a 4-core host (CodegenMetrics compile
+        # count per warm call, default cap → a cap of 1024-2000): one
+        # similarity iteration (touch_items → auto-select →
+        # similar_to_exact(dict_encode) → recommend → attribute) 152-159 →
+        # 0-4, ~1.1-1.2 s of Janino time; one run_pipeline pass at sf0.002
+        # 351-358 → 6-10 (warm pass ~11.5 s → ~9.5 s); a streaming_construct
+        # drain 0 at either cap. 1024 covers all three with headroom. Cost:
+        # ~0.1 MB of metaspace per cached class (a first pipeline pass
+        # compiled 342 classes, metaspace 145 → 179 MB), so a full cache
+        # holds ~100 MB. Details: BENCH/BASELINE.md §6.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
@@ -128,6 +136,15 @@ def get_spark(
             f"already-started JVM; pass `spark-submit --driver-memory {intended:g}g`"
         )
     return spark
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes this JVM's codegen has compiled so far: Spark records one
+    CodegenMetrics compilation-time sample per compile, cache hits record
+    none. A delta over a warm call that is not ~0 means the codegen cache
+    is smaller than the call's working set."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # type: ignore[union-attr]
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _parse_size_gb(size: str) -> float | None:

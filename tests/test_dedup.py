@@ -6,9 +6,11 @@ from pyspark.sql import functions as F
 from kgc.operators.dedup import (
     _simhash64,
     ann_topk_lsh,
+    doc_shingles,
     embedding_near_dup,
     jaccard_pairs_bruteforce,
     minhash_banded_pairs,
+    shingle_table_bytes,
     simhash_pairs,
 )
 
@@ -72,6 +74,34 @@ class TestMinHashBanded:
             for r in minhash_banded_pairs(docs, bands=8, rows=2, threshold=0.5).collect()
         }
         assert len(banded & gt) > len(single & gt)
+
+
+    def test_shingle_table_bytes_counts_unsafe_row_layout(self, spark):
+        """"a b c d" at k=3 → shingles "a b c", "b c d" (5 bytes, one word
+        each): 32 row words + 8 array null bits + 2×8 offsets + 2×8 data."""
+        docs = spark.createDataFrame([("d1", "a b c d")], "doc_id string, text string")
+        assert shingle_table_bytes(doc_shingles(docs)) == 72
+
+    def test_verify_join_shape_follows_byte_cap(self, spark, monkeypatch):
+        """Under the cap the shingle table is the broadcast build side of the
+        verify join; over it the sort-merge shape stands. Same pairs both
+        ways."""
+        import kgc.operators.dedup as dd
+
+        docs = self._planted_docs(spark)
+
+        def run():
+            df = minhash_banded_pairs(docs, threshold=0.5)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+            verify = [ln for ln in plan.splitlines() if "Join [id_" in ln]
+            return sorted(tuple(r) for r in df.collect()), verify
+
+        small, small_joins = run()
+        monkeypatch.setattr(dd, "VERIFY_BROADCAST_BYTES", -1)
+        big, big_joins = run()
+        assert small_joins and all("BroadcastHashJoin" in ln for ln in small_joins), small_joins
+        assert big_joins and all("SortMergeJoin" in ln for ln in big_joins), big_joins
+        assert small == big and len(small) >= 8
 
 
 class TestSimHash:

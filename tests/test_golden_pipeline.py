@@ -191,3 +191,28 @@ class TestCrashRecovery:
         pr = pr_eval(tables["triples"].select(*keys), gt.select(*keys), keys)
         assert pr["precision"] == 1.0 and pr["recall"] == 1.0
         assert tables["recommendations"].count() > 0
+
+    @pytest.mark.parametrize(
+        "builder, upstream",
+        [
+            # doc chain: link raises while ingest/extract finalizes are deferred
+            ("link_mentions", ["ingest", "extract", "canonicalize"]),
+            # similarity raises while attribute runs beside it
+            ("similar_to_exact", ["ingest", "extract", "link", "canonicalize", "triples", "attribute"]),
+        ],
+    )
+    def test_failed_stage_leaves_upstream_manifests(self, spark, tmp_path, monkeypatch, builder, upstream):
+        """A stage that raises reaches the caller only after every upstream
+        stage's deferred finalize has written its manifest, so a resume
+        reuses all of them."""
+        import kgc.plans.run as runmod
+
+        def boom(*a, **k):
+            raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(runmod, builder, boom)
+        workdir = str(tmp_path / "fail")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, workdir, SF, force=True)
+        missing = [s for s in upstream if not os.path.exists(os.path.join(workdir, s, "_MANIFEST.json"))]
+        assert not missing, missing
