@@ -111,7 +111,6 @@ def main() -> None:
     part_of = part_of_dim(spark)
     timed("attribution", lambda: attribute(triples, part_of))
     timed("similarity_exact", lambda: similar_to_exact(triples))
-    timed("similarity_exact_dictenc", lambda: similar_to_exact(triples, dict_encode=True))
     stop = hot_activities(touch_items(triples))
     timed("similarity_lsh", lambda: candidate_pairs_lsh(triples, stoplist=stop))
 
@@ -124,7 +123,7 @@ def main() -> None:
     timed("similarity_lsh_bitmask", _lsh_bitmask)
 
     def _recommend():
-        sim = similar_to_exact(triples, dict_encode=True)
+        sim = similar_to_exact(triples)
         return recommend(triples, sim)
 
     timed("recommend_fresh", _recommend)

@@ -267,17 +267,17 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
 def similar_to_exact(
     triples: DataFrame, dict_encode: bool = False, items: DataFrame | None = None
 ) -> DataFrame:
-    """SIMILAR_TO edges. With ``dict_encode`` the Σdeg² pair shuffle carries
-    8-byte codes instead of id strings (see encode_individuals); output is
-    the identical row set either way (tests pin equality). `items` supplies
-    a prebuilt (ideally materialized) touch_items table so callers that
-    already paid the dedup shuffle don't pay it again."""
+    """SIMILAR_TO edges. The Σdeg² pair shuffle carries 8-byte codes instead
+    of id strings (see encode_individuals); the output is the row set
+    scoring raw ids gives (tests pin equality). `dict_encode` is accepted
+    and ignored: every call takes the encoded path (the raw-id one measured
+    13.35 s vs 8.88 s at sf0.1, flat at sf0.02). `items` supplies a prebuilt
+    (ideally materialized) touch_items table so callers that already paid
+    the dedup shuffle don't pay it again."""
     if items is None:
         # raw (non-distinct) on purpose: _items_with_deg's collect_set dedups,
         # so the standalone call pays ONE shuffle instead of dedup + groupBy (r6)
         items = _touch_items_raw(triples)
-    if not dict_encode:
-        return score_pairs(candidate_pairs_exact(items))
     enc, dic = encode_individuals(items)
     pairs = candidate_pairs_exact(enc)
     da = dic.select(F.col("code").alias("ind_a"), F.col("individual").alias("_sa"))
@@ -286,8 +286,8 @@ def similar_to_exact(
     # cols + id string) while `pairs` is the Σdeg² table — the planner's
     # default-sized view of the checkpointed dic picked sort-merge, paying
     # two full exchanges + sorts OF THE PAIR TABLE just to decode ids
-    # (measured 11.7 s → 6.6 s median on the sf0.1 noop bench). dict_encode
-    # is only engaged below the exact-path pair threshold, where the
+    # (measured 11.7 s → 6.6 s median on the sf0.1 noop bench). The exact
+    # path is only auto-selected below the pair threshold, where the
     # individual vocabulary is far under any broadcast cap.
     decoded = pairs.join(F.broadcast(da), "ind_a").join(F.broadcast(db), "ind_b")
     # code order != string order: re-canonicalize so ind_a < ind_b as strings
@@ -329,7 +329,10 @@ def encode_individuals(items: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.count("*").alias("n"), F.countDistinct("code").alias("d")
     ).collect()[0]
     if audit["n"] != audit["d"]:  # ~2^-65 per pair; refuse rather than corrupt
-        raise ValueError("xxhash64 collision in individual vocabulary — use dict_encode=False")
+        raise ValueError(
+            "xxhash64 collision in individual vocabulary — encoded SIMILAR_TO "
+            "would merge two individuals; refusing"
+        )
     return items.withColumn("individual", F.xxhash64("individual")), dic
 
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from kgc.operators.canon import connected_components
 from kgc.operators.dedup import contamination_pairs, minhash_banded_pairs
 from kgc.operators.sample import pack_greedy, quota_sample
-from kgc.plans.run import _stage
+from kgc.plans.stages import StageRunner
 
 
 def run_curation(
@@ -100,11 +100,6 @@ def run_curation(
     (ADVICE r3): re-running in the same workdir with a different
     --min-quality/--quota/... must invalidate downstream stage manifests,
     not silently resume outputs computed under the old parameters."""
-    os.makedirs(workdir, exist_ok=True)
-    # Deferred stage-finalize futures (see kgc/plans/run.py _stage): the
-    # op-05 metrics scan + manifest of each stage overlaps the next stage's
-    # build; all futures are joined before this function returns.
-    deferred: list = []
     shard_tag = "auto" if n_shards is None else str(n_shards)
     rep_tag = "off" if max_repetition is None else f"{max_repetition:g}"
     if tokenizer == "ws":
@@ -118,183 +113,170 @@ def run_curation(
         f"-k{quota}-b{budget}-s{shard_tag}-r{rep_tag}-t{tok_tag}-d{dedup_keep}"
         f"-p{'on' if redact_pii else 'off'}"
     )
-    if redact_pii:
-        from kgc.operators.pii import redact_pii as _redact
+    with StageRunner(spark, workdir, input_fp, force=force) as stages:
+        if redact_pii:
+            from kgc.operators.pii import redact_pii as _redact
 
-        # materialized as its OWN checkpointed stage, not a lazy transform:
-        # six downstream stages re-derive `docs`, and re-running the 3-regex
-        # rewrite per consumer cost +39% wall on the 1M-doc probe; one
-        # materialized pass restores the map-only price (BENCH §2)
-        _in = docs
-        docs = _stage(spark, workdir, "redact", input_fp, lambda: _redact(_in),
-                      bucket_by="doc_id", force=force, deferred=deferred)
-    rejects: list[DataFrame] = []
+            # materialized as its OWN checkpointed stage, not a lazy transform:
+            # six downstream stages re-derive `docs`, and re-running the 3-regex
+            # rewrite per consumer cost +39% wall on the 1M-doc probe; one
+            # materialized pass restores the map-only price (BENCH §2)
+            _in = docs
+            docs = stages.run("redact", lambda: _redact(_in), bucket_by="doc_id")
+        rejects: list[DataFrame] = []
 
-    def reject(ids: DataFrame, stage: str, reason_col):
-        rejects.append(
-            ids.select(
-                F.col("doc_id"), F.lit(stage).alias("stage"), reason_col.alias("reason")
-            )
-        )
-
-    # -- quality: score every doc, keep quality_score >= min_quality --------
-    def build_quality():
-        # quality_score is computed MAP-ONLY on every row (r6): the guarded
-        # quality_score_col expression scores empty/null-text docs 0.0
-        # inline (ANSI-safe — the `when` branch guards the divisions), so
-        # the r5 shape's score-the-non-empty-slice + left-join-back (a
-        # sort-merge self-join: two full-corpus exchanges + sorts inside
-        # the heaviest curation stage) collapses into a projection. Same
-        # rows, same schema/order (doc_id is docs' leading column).
-        from kgc.operators.curate import quality_score_col
-
-        out = docs.select(
-            "doc_id", *[c for c in docs.columns if c != "doc_id"]
-        ).withColumn("quality_score", quality_score_col("text"))
-        if max_repetition is not None:
-            from kgc.operators.curate import repetition_features
-
-            rep = repetition_features(docs).select(
-                "doc_id",
-                F.greatest("dup_line_fraction", "top_bigram_fraction").alias("rep_score"),
-            )
-            out = out.join(rep, "doc_id", "left").withColumn(
-                "rep_score", F.coalesce("rep_score", F.lit(0.0))
-            )
-        return out
-
-    scored = _stage(spark, workdir, "quality", input_fp, build_quality,
-                    bucket_by="doc_id", force=force, deferred=deferred)
-    keep_pred = F.col("quality_score") >= min_quality
-    if max_repetition is not None:
-        keep_pred = keep_pred & (F.col("rep_score") <= max_repetition)
-    kept_q = scored.filter(keep_pred)
-    reject(
-        scored.filter(~keep_pred),
-        "quality",
-        F.when(
-            F.col("quality_score") < min_quality,
-            F.concat(F.lit("quality_score="), F.col("quality_score").cast("string")),
-        ).otherwise(
-            F.concat(
-                F.lit("rep_score="),
-                (F.col("rep_score") if max_repetition is not None else F.lit(0.0)).cast("string"),
-            )
-        ),
-    )
-
-    # -- exact_dedup: keep the min doc_id of each identical-content group ---
-    def build_exact():
-        keep = (
-            kept_q.groupBy(F.md5("text").alias("_h"))
-            .agg(F.min("doc_id").alias("doc_id"))
-            .drop("_h")
-        )
-        return kept_q.join(keep, "doc_id", "left_semi")
-
-    kept_e = _stage(spark, workdir, "exact_dedup", input_fp, build_exact,
-                    bucket_by="doc_id", force=force, deferred=deferred)
-    reject(kept_q.join(kept_e, "doc_id", "left_anti"), "exact_dedup",
-           F.lit("exact_duplicate"))
-
-    # -- near_dedup: banded-minhash pairs -> CC -> keep one per cluster ----
-    def build_near():
-        pairs = minhash_banded_pairs(kept_e, threshold=0.5)
-        edges = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        ).localCheckpoint(eager=True)  # CC iterates; don't re-derive shingles per round
-        cc = connected_components(edges)
-        if dedup_keep == "best_quality":
-            from kgc.operators.dedup import keep_best_per_cluster
-
-            # kept_e still carries quality_score from the quality stage
-            keep = (
-                keep_best_per_cluster(
-                    kept_e, cc, kept_e.select("doc_id", "quality_score")
+        def reject(ids: DataFrame, stage: str, reason_col):
+            rejects.append(
+                ids.select(
+                    F.col("doc_id"), F.lit(stage).alias("stage"), reason_col.alias("reason")
                 )
-                .filter(F.col("doc_id") == F.col("keep_doc_id"))
-                .select("doc_id")
             )
-        elif dedup_keep == "min_id":
+
+        # -- quality: score every doc, keep quality_score >= min_quality ----
+        def build_quality():
+            # quality_score is computed MAP-ONLY on every row (r6): the guarded
+            # quality_score_col expression scores empty/null-text docs 0.0
+            # inline (ANSI-safe — the `when` branch guards the divisions), so
+            # the r5 shape's score-the-non-empty-slice + left-join-back (a
+            # sort-merge self-join: two full-corpus exchanges + sorts inside
+            # the heaviest curation stage) collapses into a projection. Same
+            # rows, same schema/order (doc_id is docs' leading column).
+            from kgc.operators.curate import quality_score_col
+
+            out = docs.select(
+                "doc_id", *[c for c in docs.columns if c != "doc_id"]
+            ).withColumn("quality_score", quality_score_col("text"))
+            if max_repetition is not None:
+                from kgc.operators.curate import repetition_features
+
+                rep = repetition_features(docs).select(
+                    "doc_id",
+                    F.greatest("dup_line_fraction", "top_bigram_fraction").alias("rep_score"),
+                )
+                out = out.join(rep, "doc_id", "left").withColumn(
+                    "rep_score", F.coalesce("rep_score", F.lit(0.0))
+                )
+            return out
+
+        scored = stages.run("quality", build_quality, bucket_by="doc_id")
+        keep_pred = F.col("quality_score") >= min_quality
+        if max_repetition is not None:
+            keep_pred = keep_pred & (F.col("rep_score") <= max_repetition)
+        kept_q = scored.filter(keep_pred)
+        rep_score = F.col("rep_score") if max_repetition is not None else F.lit(0.0)
+        reject(
+            scored.filter(~keep_pred),
+            "quality",
+            F.when(
+                F.col("quality_score") < min_quality,
+                F.concat(F.lit("quality_score="), F.col("quality_score").cast("string")),
+            ).otherwise(F.concat(F.lit("rep_score="), rep_score.cast("string"))),
+        )
+
+        # -- exact_dedup: keep the min doc_id of each identical-content group
+        def build_exact():
             keep = (
-                kept_e.select(F.col("doc_id").alias("node"))
-                .join(cc, "node", "left")
-                .filter(F.col("component").isNull() | (F.col("component") == F.col("node")))
-                .select(F.col("node").alias("doc_id"))
+                kept_q.groupBy(F.md5("text").alias("_h"))
+                .agg(F.min("doc_id").alias("doc_id"))
+                .drop("_h")
             )
+            return kept_q.join(keep, "doc_id", "left_semi")
+
+        kept_e = stages.run("exact_dedup", build_exact, bucket_by="doc_id")
+        reject(kept_q.join(kept_e, "doc_id", "left_anti"), "exact_dedup",
+               F.lit("exact_duplicate"))
+
+        # -- near_dedup: banded-minhash pairs -> CC -> keep one per cluster
+        def build_near():
+            pairs = minhash_banded_pairs(kept_e, threshold=0.5)
+            edges = pairs.select(
+                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+            ).localCheckpoint(eager=True)  # CC iterates; don't re-derive shingles per round
+            cc = connected_components(edges)
+            if dedup_keep == "best_quality":
+                from kgc.operators.dedup import keep_best_per_cluster
+
+                # kept_e still carries quality_score from the quality stage
+                keep = (
+                    keep_best_per_cluster(
+                        kept_e, cc, kept_e.select("doc_id", "quality_score")
+                    )
+                    .filter(F.col("doc_id") == F.col("keep_doc_id"))
+                    .select("doc_id")
+                )
+            elif dedup_keep == "min_id":
+                keep = (
+                    kept_e.select(F.col("doc_id").alias("node"))
+                    .join(cc, "node", "left")
+                    .filter(F.col("component").isNull() | (F.col("component") == F.col("node")))
+                    .select(F.col("node").alias("doc_id"))
+                )
+            else:
+                raise ValueError(
+                    f"unknown dedup_keep {dedup_keep!r} (expected 'min_id' or 'best_quality')"
+                )
+            return kept_e.join(keep, "doc_id", "left_semi")
+
+        kept_n = stages.run("near_dedup", build_near, bucket_by="doc_id")
+        reject(kept_e.join(kept_n, "doc_id", "left_anti"), "near_dedup",
+               F.lit("near_duplicate_cluster_member"))
+
+        # -- decontam: drop docs containing too much benchmark material -----
+        def build_decontam():
+            is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0
+            contaminated = (
+                contamination_pairs(kept_n.filter(~is_bench), kept_n.filter(is_bench))
+                .filter(F.col("containment") >= contam_threshold)
+                .select(F.col("train_id").alias("doc_id"))
+                .distinct()
+            )
+            # benchmark docs themselves leave the training corpus too
+            return (
+                kept_n.filter(~is_bench).join(contaminated, "doc_id", "left_anti")
+            )
+
+        kept_d = stages.run("decontam", build_decontam, bucket_by="doc_id")
+        reject(kept_n.join(kept_d, "doc_id", "left_anti"), "decontam",
+               F.when(F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0,
+                      "benchmark_slice").otherwise("contaminated"))
+
+        # -- sample: per-language quota (optional) --------------------------
+        if quota > 0:
+            def build_sample():
+                keep = quota_sample(kept_d, "lang", k=quota).select(
+                    F.col("id").alias("doc_id")
+                )
+                return kept_d.join(keep, "doc_id", "left_semi")
+
+            kept_s = stages.run("sample", build_sample, bucket_by="doc_id")
+            reject(kept_d.join(kept_s, "doc_id", "left_anti"), "sample",
+                   F.lit("over_stratum_quota"))
         else:
-            raise ValueError(
-                f"unknown dedup_keep {dedup_keep!r} (expected 'min_id' or 'best_quality')"
-            )
-        return kept_e.join(keep, "doc_id", "left_semi")
+            kept_s = kept_d
 
-    kept_n = _stage(spark, workdir, "near_dedup", input_fp, build_near,
-                    bucket_by="doc_id", force=force, deferred=deferred)
-    reject(kept_e.join(kept_n, "doc_id", "left_anti"), "near_dedup",
-           F.lit("near_duplicate_cluster_member"))
+        # -- pack: token-budget bin assignment over the survivors -----------
+        def build_pack():
+            return pack_greedy(
+                kept_s, budget=budget, n_shards=n_shards,
+                tokenizer=tokenizer, vocab=vocab,
+            ).select("shard_id", F.col("id").alias("doc_id"), "n_tokens", "bin_id")
 
-    # -- decontam: drop docs containing too much benchmark material ---------
-    def build_decontam():
-        is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0
-        contaminated = (
-            contamination_pairs(kept_n.filter(~is_bench), kept_n.filter(is_bench))
-            .filter(F.col("containment") >= contam_threshold)
-            .select(F.col("train_id").alias("doc_id"))
-            .distinct()
-        )
-        # benchmark docs themselves leave the training corpus too
-        return (
-            kept_n.filter(~is_bench).join(contaminated, "doc_id", "left_anti")
-        )
+        packs = stages.run("pack", build_pack)
 
-    kept_d = _stage(spark, workdir, "decontam", input_fp, build_decontam,
-                    bucket_by="doc_id", force=force, deferred=deferred)
-    reject(kept_n.join(kept_d, "doc_id", "left_anti"), "decontam",
-           F.when(F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0,
-                  "benchmark_slice").otherwise("contaminated"))
+        def build_rejects():
+            out = rejects[0]
+            for r in rejects[1:]:
+                out = out.unionByName(r)
+            return out
 
-    # -- sample: per-language quota (optional) ------------------------------
-    if quota > 0:
-        def build_sample():
-            keep = quota_sample(kept_d, "lang", k=quota).select(
-                F.col("id").alias("doc_id")
-            )
-            return kept_d.join(keep, "doc_id", "left_semi")
+        rejects_df = stages.run("rejects", build_rejects)
 
-        kept_s = _stage(spark, workdir, "sample", input_fp, build_sample,
-                        bucket_by="doc_id", force=force, deferred=deferred)
-        reject(kept_d.join(kept_s, "doc_id", "left_anti"), "sample",
-               F.lit("over_stratum_quota"))
-    else:
-        kept_s = kept_d
-
-    # -- pack: token-budget bin assignment over the survivors ---------------
-    def build_pack():
-        return pack_greedy(
-            kept_s, budget=budget, n_shards=n_shards,
-            tokenizer=tokenizer, vocab=vocab,
-        ).select("shard_id", F.col("id").alias("doc_id"), "n_tokens", "bin_id")
-
-    packs = _stage(spark, workdir, "pack", input_fp, build_pack, force=force,
-                   deferred=deferred)
-
-    def build_rejects():
-        out = rejects[0]
-        for r in rejects[1:]:
-            out = out.unionByName(r)
-        return out
-
-    rejects_df = _stage(spark, workdir, "rejects", input_fp, build_rejects, force=force,
-                        deferred=deferred)
-
-    for f in deferred:
-        f.result()
-    return {
-        "scored": scored,
-        "corpus": kept_s,
-        "packs": packs,
-        "rejects": rejects_df,
-    }
+        return {
+            "scored": scored,
+            "corpus": kept_s,
+            "packs": packs,
+            "rejects": rejects_df,
+        }
 
 
 def synth_curation_docs(spark: SparkSession, sf: float) -> DataFrame:

@@ -9,8 +9,6 @@ partition (determinism §2.4-E makes this meaningful).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,11 +71,6 @@ def partition_metrics_arrow(df: DataFrame, stage: str) -> DataFrame:
         .agg(F.sum("rows_out").alias("rows_out"), F.expr("bit_xor(fingerprint)").alias("fingerprint"))
         .select(F.lit(stage).alias("stage"), "partition_id", "rows_out", "fingerprint")
     )
-
-
-def emit_metrics(df: DataFrame, stage: str, metrics_dir: str) -> None:
-    out = os.path.join(metrics_dir, stage)
-    partition_metrics(df, stage).write.mode("overwrite").parquet(out)
 
 
 def table_fingerprint(df: DataFrame) -> int:

@@ -13,7 +13,8 @@ sandbox has no Iceberg runtime jar, so the layer is a seam:
   layout story for the 10^12-doc design.
 
 op-03 checkpoints write a ``_MANIFEST.json`` (input fingerprint + row count +
-schema) beside the data; resume skips a stage when its manifest matches.
+schema) beside the data; resume skips a stage when its manifest matches
+(the stage protocol itself lives in kgc/plans/stages.py).
 """
 
 from __future__ import annotations
@@ -210,26 +211,6 @@ def write_manifest(path: str, stage: str, input_fingerprint: str, rows: int, sch
     }
     with open(_manifest_path(path), "w") as f:
         json.dump(manifest, f, indent=2)
-
-
-def checkpoint(
-    df: DataFrame,
-    path: str,
-    stage: str,
-    input_fingerprint: str,
-    bucket_by: str | None = None,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """Write `df` durably + a manifest binding it to its input fingerprint.
-
-    Returns the re-read DataFrame (truncates lineage — downstream stages plan
-    against the materialized table, not the whole upstream DAG).
-    """
-    spark = df.sparkSession
-    write_table(df, path, bucket_by=bucket_by, n_buckets=n_buckets)
-    n_rows = spark.read.parquet(path).count()
-    write_manifest(path, stage, input_fingerprint, n_rows, df.schema.simpleString())
-    return read_table(spark, path)
 
 
 def resume(spark: SparkSession, path: str, stage: str, input_fingerprint: str) -> DataFrame | None:

@@ -265,6 +265,26 @@ def test_repetition_gate_rejects_template_spam(spark, tmp_path_factory):
     } - {901}
 
 
+def test_failed_stage_leaves_upstream_manifests(spark, tmp_path_factory, monkeypatch):
+    """A stage that raises reaches the caller only after every upstream
+    stage's deferred finalize has written its manifest, so a resume reuses
+    all of them."""
+    import os
+
+    import kgc.plans.curate as curmod
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(curmod, "pack_greedy", boom)
+    wd = str(tmp_path_factory.mktemp("curate_fail"))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_curation(spark, wd, _mk_docs(spark), input_fp="fp", quota=3, force=True)
+    upstream = ["quality", "exact_dedup", "near_dedup", "decontam", "sample"]
+    missing = [s for s in upstream if not os.path.exists(os.path.join(wd, s, "_MANIFEST.json"))]
+    assert not missing, missing
+
+
 def test_empty_stage_output_is_readable_and_resumable(spark, tmp_path_factory):
     """r4: a stage that filters EVERYTHING (min_quality above every score)
     must produce a readable empty table and resume cleanly — previously the

@@ -199,6 +199,8 @@ class TestCrashRecovery:
             ("link_mentions", ["ingest", "extract", "canonicalize"]),
             # similarity raises while attribute runs beside it
             ("similar_to_exact", ["ingest", "extract", "link", "canonicalize", "triples", "attribute"]),
+            # the concurrently submitted canonicalize stage raises
+            ("entities_canon_map", ["ingest", "extract", "link"]),
         ],
     )
     def test_failed_stage_leaves_upstream_manifests(self, spark, tmp_path, monkeypatch, builder, upstream):

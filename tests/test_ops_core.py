@@ -324,22 +324,22 @@ class TestSimilarity:
         assert a == b and len(a) > 0
 
     def test_dict_encoded_similarity_matches_plain(self, spark):
-        """Dictionary-encoded pair shuffle (8-byte codes) must emit the
-        identical SIMILAR_TO row set, including (ind_a, ind_b) string-order
-        canonicalization, as the plain path."""
+        """The dictionary-encoded pair shuffle (8-byte codes) must emit the
+        SIMILAR_TO row set that scoring raw ids gives, including the
+        (ind_a, ind_b) string-order canonicalization."""
         import os
 
-        from kgc.operators.similarity import similar_to_exact
+        from kgc.operators.similarity import candidate_pairs_exact, score_pairs, touch_items
 
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         t = spark.read.parquet(os.path.join(repo, "data", "oracle", "sf0.01", "triples.parquet"))
         plain = sorted(
             (r["ind_a"], r["ind_b"], round(r["similarity"], 9))
-            for r in similar_to_exact(t).collect()
+            for r in score_pairs(candidate_pairs_exact(touch_items(t))).collect()
         )
         enc = sorted(
             (r["ind_a"], r["ind_b"], round(r["similarity"], 9))
-            for r in similar_to_exact(t, dict_encode=True).collect()
+            for r in similar_to_exact(t).collect()
         )
         assert plain == enc and len(plain) > 0
         assert all(a < b for a, b, _ in enc)

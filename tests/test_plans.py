@@ -368,6 +368,52 @@ class TestCodegen:
         # whole working set.
         assert recompiled <= 8, recompiled
 
+    def test_warm_similarity_chain_job_count(self, spark):
+        """The chain is bound by per-job latency, not compute: pin how many
+        Spark jobs a warm pass runs (job ids under a job group set for the
+        pass), so a change that adds a job to the chain shows here."""
+        from kgc.operators.attribution import attribute
+        from kgc.operators.recommend import recommend
+        from kgc.operators.similarity import (
+            AUTO_PAIR_THRESHOLD,
+            select_similarity_mode,
+            similar_to_exact,
+            touch_items,
+        )
+        from kgc.sources.synth import ground_truth_triples, part_of_dim
+
+        # measured on this fixture, constant over repeated warm passes:
+        # touch_items + auto-select + encoded exact path + recommend and
+        # attribute folds (the benchmark's sf0.02 chain runs 36)
+        max_jobs = 32
+
+        sc = spark.sparkContext
+        triples = ground_truth_triples(spark, 0.001).cache()
+        part_of = part_of_dim(spark)
+        triples.count()
+
+        def materialize(df):
+            df.write.format("noop").mode("overwrite").save()
+
+        def one_pass(group):
+            sc.setJobGroup(group, "warm similarity chain")
+            try:
+                items = touch_items(triples).localCheckpoint(eager=True)
+                select_similarity_mode(triples, AUTO_PAIR_THRESHOLD, items=items)
+                sim = similar_to_exact(triples, items=items).localCheckpoint(eager=True)
+                materialize(recommend(triples, sim))
+                materialize(attribute(triples, part_of))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        try:
+            one_pass("kgc-jobs-cold")
+            jobs = one_pass("kgc-jobs-warm")
+        finally:
+            triples.unpersist()
+        assert 0 < jobs <= max_jobs, jobs
+
 
 class TestIvfStorage:
     def test_probe_scan_is_partition_pruned(self, spark, tmp_path):
