@@ -28,6 +28,11 @@ of the streaming-dedup sink + compaction treatment:
   partition filter, so unprobed cell directories are never read (plan
   pinned in tests/test_plans.py).
 
+Reads never mutate the index. Recovery from an interrupted maintain (its
+`_maintaining.json` marker) runs only from ivf_index_maintain — directly
+or through ivf_index_flush(split_threshold=...) — and read_index_data
+(so every query) raises while the marker is present.
+
 Like the streaming sink compactors, maintain/append assume a QUIESCED
 index (no concurrent writer); an atomic-snapshot table format
 (Iceberg/Delta) would replace the partition-overwrite + stale-dir sweep
@@ -42,7 +47,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgc.operators.dedup import ivf_assign, ivf_codebook
+from kgc.operators.dedup import (
+    _ivf_topk,
+    _members,
+    _probe_skeys,
+    _sub_codebooks,
+    _with_skey,
+    ivf_assign,
+    ivf_codebook,
+)
 
 _SUBBOOK_SCHEMA = "cell long, sub_id int, scv array<double>, scn double"
 
@@ -67,8 +80,9 @@ def read_index_subbooks(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _read_data_raw(spark: SparkSession, path: str) -> DataFrame:
-    """The data scan WITHOUT entry recovery — used by the recovery rewrite
-    itself (read_index_data would recurse through _recover_maintain)."""
+    """The data scan WITHOUT the maintain-marker check — for the writers
+    (the maintain rewrite, the streaming flush merge), which must read the
+    layout an interrupted maintain left behind."""
     return spark.read.schema(
         "vec_id long, dv array<double>, dn double, skey string"
     ).parquet(_dirs(path)[0]).select("vec_id", "dv", "dn", "skey")
@@ -80,55 +94,26 @@ def read_index_data(spark: SparkSession, path: str) -> DataFrame:
     otherwise infer it as int (every value a bare cell id), and the
     query-side isin would need a cast that blocks partition pruning.
 
-    Heals an interrupted maintain on entry (r6): if the `_maintaining`
-    marker is present, the per-cell rewrite re-runs before the scan, so
-    readers never see the duplicated old+new partition layout a crash
-    between overwrite and sweep leaves. One os.path.exists on the healthy
-    path."""
-    _recover_maintain(spark, path)
+    Reads never mutate the index: while a `_maintaining` marker names an
+    interrupted maintain, the layout may hold a hot cell's rows twice
+    (old and new partitions), so the read raises instead of answering
+    from it. ivf_index_maintain runs the recovery."""
+    if os.path.exists(_maintain_marker(path)):
+        raise ValueError(
+            f"read_index_data: {path} has an interrupted maintain "
+            f"({_maintain_marker(path)}) — run ivf_index_maintain to recover it"
+        )
     return _read_data_raw(spark, path)
 
 
-def _ranked_subs(vec_col: str, norm_col: str):
-    """(-round(cos,9), sub_id) struct sort == cosine DESC, sub_id ASC —
-    byte-identical tie rule as op-58's query-time split."""
-    return F.array_sort(
-        F.transform(
-            F.col("subs"),
-            lambda s: F.struct(
-                (-F.round(
-                    F.aggregate(
-                        F.zip_with(F.col(vec_col), s["scv"], lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x,
-                    ) / (F.col(norm_col) * s["scn"]), 9,
-                )).alias("nk"),
-                s["sub_id"].alias("sub_id"),
-            ),
-        )
-    )
-
-
-def _with_skey(assigned: DataFrame, subbooks: DataFrame) -> DataFrame:
-    """Refine (vec_id, dv, dn, cell) rows to their stored skey: members of
-    split cells rank the cell's sub-codebook (op-58 machinery), members of
-    unsplit cells keep the bare cell string."""
-    subbook = subbooks.groupBy("cell").agg(
-        F.collect_list(F.struct("sub_id", "scv", "scn")).alias("subs")
-    )
-    cell_str = F.col("cell").cast("string")
-    return (
-        assigned.join(F.broadcast(subbook), "cell", "left")
-        .withColumn(
-            "skey",
-            F.when(F.col("subs").isNull(), cell_str).otherwise(
-                F.concat_ws(
-                    "#", cell_str,
-                    F.element_at(_ranked_subs("dv", "dn"), 1)["sub_id"].cast("string"),
-                )
-            ),
-        )
-        .select("vec_id", "dv", "dn", "skey")
-    )
+def _index_rows(
+    spark: SparkSession, path: str, emb: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, dv, dn, skey) rows for `emb` under the STORED codebook and
+    sub-codebooks — what append and the streaming ingest write."""
+    cb = read_index_codebook(spark, path)
+    assigned = _members(ivf_assign(emb, cb, nprobe=1, id_col=id_col, vec_col=vec_col))
+    return _with_skey(assigned, read_index_subbooks(spark, path))
 
 
 def ivf_index_build(
@@ -147,9 +132,8 @@ def ivf_index_build(
     cb = ivf_codebook(emb, n_cells, id_col, vec_col, centroids)
     cb.write.mode("overwrite").parquet(cb_dir)
     stored_cb = emb.sparkSession.read.parquet(cb_dir)
-    rows = ivf_assign(emb, stored_cb, nprobe=1, id_col=id_col, vec_col=vec_col).select(
-        F.col("id").alias("vec_id"), F.col("v").alias("dv"),
-        F.col("vn").alias("dn"), F.col("cell").cast("string").alias("skey"),
+    rows = _members(ivf_assign(emb, stored_cb, nprobe=1, id_col=id_col, vec_col=vec_col)).select(
+        "vec_id", "dv", "dn", F.col("cell").cast("string").alias("skey"),
     )
     rows.write.mode("overwrite").partitionBy("skey").parquet(data_dir)
 
@@ -166,13 +150,8 @@ def ivf_index_append(
     already-split cell goes straight to its sub-bucket), append only the
     touched skey partitions. No existing row is read or rewritten —
     appends are O(new vectors)."""
-    data_dir = _dirs(path)[0]
-    cb = read_index_codebook(spark, path)
-    assigned = ivf_assign(new_emb, cb, nprobe=1, id_col=id_col, vec_col=vec_col).select(
-        F.col("id").alias("vec_id"), F.col("v").alias("dv"), F.col("vn").alias("dn"), "cell"
-    )
-    rows = _with_skey(assigned, read_index_subbooks(spark, path))
-    rows.write.mode("append").partitionBy("skey").parquet(data_dir)
+    rows = _index_rows(spark, path, new_emb, id_col, vec_col)
+    rows.write.mode("append").partitionBy("skey").parquet(_dirs(path)[0])
 
 
 def _maintain_marker(path: str) -> str:
@@ -204,8 +183,6 @@ def _rewrite_cells(spark: SparkSession, path: str, cells: list[int], n_sub: int)
     members are deduplicated on vec_id before the rank, the sub-codebook
     is a pure function of the member SET, and stale dirs are recomputed
     from the filesystem rather than from pre-crash bookkeeping."""
-    from pyspark.sql import Window
-
     data_dir, _, sub_dir = _dirs(path)
     members = (
         _read_data_raw(spark, path)
@@ -214,22 +191,7 @@ def _rewrite_cells(spark: SparkSession, path: str, cells: list[int], n_sub: int)
         .dropDuplicates(["vec_id"])  # heal post-crash double reads (ADVICE r5)
         .localCheckpoint(eager=True)
     )
-    # op-58's sub-codebook rule, verbatim, over ALL current members
-    w = Window.partitionBy("cell").orderBy(
-        F.md5(
-            F.concat_ws(":", F.lit("sub"), F.col("cell").cast("string"),
-                        F.col("vec_id").cast("string"))
-        ).asc(),
-        F.col("vec_id").asc(),
-    )
-    new_subs = (
-        members.withColumn("_srk", F.row_number().over(w))
-        .filter(F.col("_srk") <= n_sub)
-        .select(
-            "cell", (F.col("_srk") - 1).cast("int").alias("sub_id"),
-            F.col("dv").alias("scv"), F.col("dn").alias("scn"),
-        )
-    )
+    new_subs = _sub_codebooks(members, n_sub)  # over ALL current members
     # subbooks dim rewrite: keep other cells' entries, replace hot cells'
     kept_subs = read_index_subbooks(spark, path).filter(~F.col("cell").isin(cells))
     merged_subs = kept_subs.unionByName(new_subs)
@@ -245,8 +207,7 @@ def _rewrite_cells(spark: SparkSession, path: str, cells: list[int], n_sub: int)
     # whatever the FILESYSTEM holds for these cells minus the new keys
     old_dirs = [d for c in cells for d in _cell_dirs_on_disk(data_dir, c)]
     new_rows = _with_skey(
-        members.select("vec_id", "dv", "dn", "cell"),
-        spark.read.schema(_SUBBOOK_SCHEMA).parquet(sub_dir),
+        members, spark.read.schema(_SUBBOOK_SCHEMA).parquet(sub_dir)
     ).localCheckpoint(eager=True)  # materialize BEFORE overwriting source dirs
     new_keys = {r["skey"] for r in new_rows.select("skey").distinct().collect()}
     (
@@ -297,20 +258,21 @@ def ivf_index_maintain(
     overwrite (only their skey dirs), then stale dirs of those cells that
     the new assignment no longer produces (e.g. the unsplit 'cell' dir)
     are swept. Crash-safe (r6, ADVICE r5): a `_maintaining.json` marker
-    written before any mutation names the cells in flight, entry recovery
-    re-runs the idempotent per-cell rewrite (members deduped on vec_id,
-    stale dirs recomputed from the filesystem), so a crash at ANY point —
-    including between the overwrite and the sweep — heals on the next
-    maintain. Quiesced-index precondition otherwise, like every compactor.
+    written before any mutation names the cells in flight; the next
+    maintain first re-runs the idempotent per-cell rewrite for them
+    (members deduped on vec_id, stale dirs recomputed from the
+    filesystem), so a crash at ANY point — including between the
+    overwrite and the sweep — heals there. Until then read_index_data
+    refuses. Quiesced-index precondition otherwise, like every compactor.
 
     Refuses while the STREAMING delta tier holds un-flushed rows (ADVICE
     r5): delta rows carry ingest-time skeys; flushing them after this
     rewrite would resurrect bare 'cell' partitions that pruned queries of
-    a split cell never probe. Flush (with split_threshold) first.
+    a split cell never probe. Flush (with split_threshold) first. The
+    check runs BEFORE the recovery rewrite, so a refusal changes nothing.
     """
     import json as _json
 
-    _recover_maintain(spark, path)
     for pending in ("delta", "delta.flushing"):
         d = os.path.join(path, pending)
         if os.path.isdir(d) and any(
@@ -321,6 +283,7 @@ def ivf_index_maintain(
                 "run ivf_index_flush(split_threshold=...) first (their "
                 "ingest-time skeys would go stale under this rewrite)"
             )
+    _recover_maintain(spark, path)
     data = read_index_data(spark, path).withColumn(
         "cell", F.split("skey", "#")[0].cast("long")
     )
@@ -347,75 +310,26 @@ def ivf_index_query(
     max_cell: int | None = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prune: bool = True,
     extra_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors from the stored index. `queries` defaults to
     the indexed vectors themselves (the ann_topk_ivf self-join contract,
     q_id != vec_id); an external query batch probes without being indexed.
 
-    `prune=True` collects the distinct probe skeys (bounded by
-    |queries|·nprobe·nprobe_sub — a driver-side dim, not data) and pushes
-    them as an isin filter so the scan partition-prunes to probed dirs.
+    The distinct probe skeys are collected (bounded by
+    |queries|·nprobe·nprobe_sub — a driver-side dim, not data) and pushed
+    as an isin filter so the scan partition-prunes to probed dirs.
 
     `extra_rows` (op-64) unions a not-yet-flushed delta tier — already in
     (vec_id, dv, dn, skey) shape — into the searched data; the probe-key
     filter is applied to the union and Catalyst pushes it through to the
     stored child, so the big tier keeps its partition pruning."""
-    from pyspark.sql import Window
-
-    cb = read_index_codebook(spark, path)
-    subbook = read_index_subbooks(spark, path).groupBy("cell").agg(
-        F.collect_list(F.struct("sub_id", "scv", "scn")).alias("subs")
-    )
     indexed = read_index_data(spark, path)
     if extra_rows is not None:
         indexed = indexed.unionByName(extra_rows)
     if queries is None:
-        q_emb = indexed.select(
-            F.col("vec_id").alias(id_col), F.col("dv").alias(vec_col)
-        )
-    else:
-        q_emb = queries
-    qcells = ivf_assign(q_emb, cb, nprobe, id_col, vec_col)
-    cell_str = F.col("cell").cast("string")
-    qs = (
-        qcells.select(
-            F.col("id").alias("q_id"), F.col("v").alias("qv"),
-            F.col("vn").alias("qn"), F.explode("probes").alias("cell"),
-        )
-        .join(F.broadcast(subbook), "cell", "left")
-        .withColumn(
-            "_skeys",
-            F.when(F.col("subs").isNull(), F.array(cell_str)).otherwise(
-                F.transform(
-                    F.slice(_ranked_subs("qv", "qn"), 1, nprobe_sub),
-                    lambda s: F.concat_ws("#", cell_str, s["sub_id"].cast("string")),
-                )
-            ),
-        )
-        .select("q_id", "qv", "qn", F.explode("_skeys").alias("skey"))
-    )
-    data = indexed
-    if prune:
-        probe_keys = [r["skey"] for r in qs.select("skey").distinct().collect()]
-        data = data.filter(F.col("skey").isin(probe_keys))
-    if max_cell is not None:
-        wc = Window.partitionBy("skey").orderBy(
-            F.md5(F.concat_ws(":", F.lit("ivf"), F.col("vec_id").cast("string"))).asc(),
-            F.col("vec_id").asc(),
-        )
-        data = (
-            data.withColumn("_mrk", F.row_number().over(wc))
-            .filter(F.col("_mrk") <= max_cell)
-            .drop("_mrk")
-        )
-    cand = qs.join(data, "skey").filter(F.col("q_id") != F.col("vec_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "dv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    scored = cand.select(
-        "q_id", "vec_id", F.round(dot / (F.col("qn") * F.col("dn")), 6).alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+        queries = indexed.select(F.col("vec_id").alias(id_col), F.col("dv").alias(vec_col))
+    qcells = ivf_assign(queries, read_index_codebook(spark, path), nprobe, id_col, vec_col)
+    qs = _probe_skeys(qcells, read_index_subbooks(spark, path), nprobe_sub)
+    probe_keys = [r["skey"] for r in qs.select("skey").distinct().collect()]
+    return _ivf_topk(qs, indexed.filter(F.col("skey").isin(probe_keys)), "skey", k, max_cell)

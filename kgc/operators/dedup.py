@@ -702,31 +702,15 @@ def ivf_assign(
     drift from the index). Returns (id, v, vn, cell, probes)."""
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     e = emb.select(F.col(id_col).alias("id"), vec.alias("v"))
-    sq_norm = _sq_norm
     # One-row codebook; collect_list order is irrelevant (re-sorted per row).
     codebook = codebook_df.agg(F.collect_list(F.struct("c_id", "cv", "cn")).alias("cents"))
     rows = (
         e.crossJoin(F.broadcast(codebook))  # 1-row build side: map-side append
-        .withColumn("vn", F.sqrt(sq_norm("v")))
+        .withColumn("vn", F.sqrt(_sq_norm("v")))
     )
-    # Per-row cell ranking: struct sort on (-csim, c_id) == csim DESC, c_id
-    # ASC — byte-identical to the oracle's row_number() ORDER BY. csim is
-    # rounded to 9 (rank-on-rounded, §2.4) so both engines rank equal keys
-    # by c_id. `vn` is referenced inside the lambda AND by the final select,
+    # `vn` is referenced inside the ranking lambda AND by the final select,
     # so CollapseProject keeps it materialized (not re-evaluated per cell).
-    sims = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            (-F.round(
-                F.aggregate(
-                    F.zip_with(F.col("v"), c["cv"], lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x,
-                ) / (F.col("vn") * c["cn"]), 9,
-            )).alias("nk"),
-            c["c_id"].alias("c_id"),
-        ),
-    )
-    ranked = rows.withColumn("_cells", F.array_sort(sims))
+    ranked = rows.withColumn("_cells", _rank_by_cosine("cents", "v", "vn", "c_id", "cv", "cn"))
     probes = F.transform(
         F.slice("_cells", 1, nprobe), lambda s: s["c_id"]
     )
@@ -735,6 +719,154 @@ def ivf_assign(
         F.element_at("_cells", 1)["c_id"].alias("cell"),
         probes.alias("probes"),
     )
+
+
+# ---------------------------------------------------------------------------
+# The IVF core: every IVF entry point (ann_topk_ivf, the op-58 query-time
+# split, the op-63/64 stored index in kgc/operators/ann_index.py and
+# kgc/streaming/ann_index.py) is a composition of these helpers, so the
+# ranking, sub-codebook, refinement, probe and search rules exist once.
+# ---------------------------------------------------------------------------
+
+
+def _rank_by_cosine(book: str, vec: str, norm: str, key: str, bvec: str, bnorm: str):
+    """Rank the array-of-structs column `book` (entries carry `key`, vector
+    `bvec`, norm `bnorm`) by cosine to the row's (`vec`, `norm`): an
+    array_sort of struct(-round(cos, 9), key) == cosine DESC, key ASC —
+    byte-identical to the oracle's row_number() ORDER BY. The cosine is
+    rounded to 9 (rank-on-rounded, §2.4) so both engines rank equal keys
+    by id."""
+    return F.array_sort(
+        F.transform(
+            F.col(book),
+            lambda c: F.struct(
+                (-F.round(
+                    F.aggregate(
+                        F.zip_with(F.col(vec), c[bvec], lambda x, y: x * y),
+                        F.lit(0.0), lambda acc, x: acc + x,
+                    ) / (F.col(norm) * c[bnorm]), 9,
+                )).alias("nk"),
+                c[key].alias(key),
+            ),
+        )
+    )
+
+
+def _members(cells: DataFrame) -> DataFrame:
+    """ivf_assign rows on the data side: (vec_id, dv, dn, cell)."""
+    return cells.select(
+        F.col("id").alias("vec_id"), F.col("v").alias("dv"), F.col("vn").alias("dn"), "cell"
+    )
+
+
+def _probes(cells: DataFrame) -> DataFrame:
+    """ivf_assign rows on the query side, one per probed cell:
+    (q_id, qv, qn, cell)."""
+    return cells.select(
+        F.col("id").alias("q_id"), F.col("v").alias("qv"),
+        F.col("vn").alias("qn"), F.explode("probes").alias("cell"),
+    )
+
+
+def _sub_codebooks(members: DataFrame, n_sub: int) -> DataFrame:
+    """Per cell, the `n_sub` members with the smallest
+    md5('sub:'||cell||':'||id) (id tie-break) become its sub-centroids:
+    (cell, sub_id, scv, scn) over (vec_id, dv, dn, cell) rows. A pure
+    function of the member SET, so arrival order never matters."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("cell").orderBy(
+        F.md5(
+            F.concat_ws(":", F.lit("sub"), F.col("cell").cast("string"),
+                        F.col("vec_id").cast("string"))
+        ).asc(),
+        F.col("vec_id").asc(),
+    )
+    return (
+        members.withColumn("_srk", F.row_number().over(w))
+        .filter(F.col("_srk") <= n_sub)
+        .select(
+            "cell", (F.col("_srk") - 1).cast("int").alias("sub_id"),
+            F.col("dv").alias("scv"), F.col("dn").alias("scn"),
+        )
+    )
+
+
+def _with_subs(rows: DataFrame, subbooks: DataFrame) -> DataFrame:
+    """Left-join each row's cell sub-codebook as the `subs` array (NULL for
+    unsplit cells)."""
+    subbook = subbooks.groupBy("cell").agg(
+        F.collect_list(F.struct("sub_id", "scv", "scn")).alias("subs")
+    )
+    return rows.join(F.broadcast(subbook), "cell", "left")
+
+
+def _skey(sub_id) -> F.Column:
+    return F.concat_ws("#", F.col("cell").cast("string"), sub_id.cast("string"))
+
+
+def _with_skey(members: DataFrame, subbooks: DataFrame) -> DataFrame:
+    """Refine (vec_id, dv, dn, cell) rows to their skey: members of split
+    cells take 'cell#sub' of their nearest sub-centroid, members of unsplit
+    cells keep the bare cell string. Returns (vec_id, dv, dn, skey)."""
+    nearest = F.element_at(_rank_by_cosine("subs", "dv", "dn", "sub_id", "scv", "scn"), 1)
+    return (
+        _with_subs(members, subbooks)
+        .withColumn(
+            "skey",
+            F.when(F.col("subs").isNull(), F.col("cell").cast("string"))
+            .otherwise(_skey(nearest["sub_id"])),
+        )
+        .select("vec_id", "dv", "dn", "skey")
+    )
+
+
+def _probe_skeys(qcells: DataFrame, subbooks: DataFrame, nprobe_sub: int) -> DataFrame:
+    """Expand each query's probed cells to skeys: a split cell contributes
+    its `nprobe_sub` nearest sub-buckets, an unsplit one its bare key.
+    Returns (q_id, qv, qn, skey), one row per probed key."""
+    ranked = _rank_by_cosine("subs", "qv", "qn", "sub_id", "scv", "scn")
+    skeys = F.when(F.col("subs").isNull(), F.array(F.col("cell").cast("string"))).otherwise(
+        F.transform(F.slice(ranked, 1, nprobe_sub), lambda s: _skey(s["sub_id"]))
+    )
+    # explode a projected column, not the expression: Spark then infers the
+    # generator's non-empty filter, which keeps the parent plan's shape
+    return (
+        _with_subs(_probes(qcells), subbooks)
+        .withColumn("_skeys", skeys)
+        .select("q_id", "qv", "qn", F.explode("_skeys").alias("skey"))
+    )
+
+
+def _ivf_topk(
+    qs: DataFrame, data: DataFrame, key: str, k: int, max_cell: int | None
+) -> DataFrame:
+    """The IVF search: cap each `key` group of the data side at its
+    `max_cell` smallest md5('ivf:'||vec_id) members (see ann_topk_ivf),
+    equi-join queries (q_id, qv, qn, key) to data (vec_id, dv, dn, key)
+    on the disjoint key, score round-6 cosine and keep the top k per query
+    (cosine DESC, vec_id ASC)."""
+    from pyspark.sql import Window
+
+    if max_cell is not None:
+        wc = Window.partitionBy(key).orderBy(
+            F.md5(F.concat_ws(":", F.lit("ivf"), F.col("vec_id").cast("string"))).asc(),
+            F.col("vec_id").asc(),
+        )
+        data = (
+            data.withColumn("_mrk", F.row_number().over(wc))
+            .filter(F.col("_mrk") <= max_cell)
+            .drop("_mrk")
+        )
+    cand = qs.join(data, key).filter(F.col("q_id") != F.col("vec_id"))
+    dot = F.aggregate(
+        F.zip_with("qv", "dv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    scored = cand.select(
+        "q_id", "vec_id", F.round(dot / (F.col("qn") * F.col("dn")), 6).alias("cosine")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
 def ann_topk_ivf(
@@ -782,35 +914,8 @@ def ann_topk_ivf(
     centroids, probing ~half the cells is the sweet spot; both dominate
     the SRP-LSH variant (8.3 s @ 0.472) on this corpus.
     """
-    from pyspark.sql import Window
-
     cells = ivf_cells(emb, n_cells, nprobe, id_col, vec_col, centroids=centroids)
-    data = cells.select(
-        F.col("id").alias("vec_id"), F.col("v").alias("dv"), F.col("vn").alias("dn"), "cell"
-    )
-    if max_cell is not None:
-        wc = Window.partitionBy("cell").orderBy(
-            F.md5(F.concat_ws(":", F.lit("ivf"), F.col("vec_id").cast("string"))).asc(),
-            F.col("vec_id").asc(),
-        )
-        data = (
-            data.withColumn("_mrk", F.row_number().over(wc))
-            .filter(F.col("_mrk") <= max_cell)
-            .drop("_mrk")
-        )
-    qs = cells.select(
-        F.col("id").alias("q_id"), F.col("v").alias("qv"), F.col("vn").alias("qn"),
-        F.explode("probes").alias("cell"),
-    )
-    cand = qs.join(data, "cell").filter(F.col("q_id") != F.col("vec_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "dv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    scored = cand.select(
-        "q_id", "vec_id", F.round(dot / (F.col("qn") * F.col("dn")), 6).alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    return _ivf_topk(_probes(cells), _members(cells), "cell", k, max_cell)
 
 
 def ivf_store(cells: DataFrame, path: str) -> None:
@@ -858,83 +963,11 @@ def ivf_split_hot_cells(
     Returns (data, probes): data = one (vec_id, dv, dn, skey) row per
     vector; probes = (q_id, qv, qn, skey) rows, one per probed sub-bucket.
     """
-    from pyspark.sql import Window
-
-    sizes = cells.groupBy("cell").agg(F.count("*").alias("_m"))
+    members = _members(cells)
+    sizes = members.groupBy("cell").agg(F.count("*").alias("_m"))
     hot = sizes.filter(F.col("_m") > split_threshold).select("cell")
-    w = Window.partitionBy("cell").orderBy(
-        F.md5(
-            F.concat_ws(":", F.lit("sub"), F.col("cell").cast("string"), F.col("id").cast("string"))
-        ).asc(),
-        F.col("id").asc(),
-    )
-    subs = (
-        cells.join(F.broadcast(hot), "cell")
-        .withColumn("_srk", F.row_number().over(w))
-        .filter(F.col("_srk") <= n_sub)
-        .select(
-            "cell", (F.col("_srk") - 1).alias("sub_id"),
-            F.col("v").alias("scv"), F.col("vn").alias("scn"),
-        )
-    )
-    subbook = subs.groupBy("cell").agg(
-        F.collect_list(F.struct("sub_id", "scv", "scn")).alias("subs")
-    )
-
-    def ranked_subs(vec_col: str, norm_col: str):
-        # (-round(cos,9), sub_id) struct sort == cosine DESC, sub_id ASC —
-        # byte-identical tie rule as the coarse ranking in ivf_cells
-        return F.array_sort(
-            F.transform(
-                F.col("subs"),
-                lambda s: F.struct(
-                    (-F.round(
-                        F.aggregate(
-                            F.zip_with(F.col(vec_col), s["scv"], lambda x, y: x * y),
-                            F.lit(0.0), lambda acc, x: acc + x,
-                        ) / (F.col(norm_col) * s["scn"]), 9,
-                    )).alias("nk"),
-                    s["sub_id"].alias("sub_id"),
-                ),
-            )
-        )
-
-    cell_str = F.col("cell").cast("string")
-    data = (
-        cells.select(
-            F.col("id").alias("vec_id"), F.col("v").alias("dv"),
-            F.col("vn").alias("dn"), "cell",
-        )
-        .join(F.broadcast(subbook), "cell", "left")
-        .withColumn(
-            "skey",
-            F.when(F.col("subs").isNull(), cell_str).otherwise(
-                F.concat_ws(
-                    "#", cell_str,
-                    F.element_at(ranked_subs("dv", "dn"), 1)["sub_id"].cast("string"),
-                )
-            ),
-        )
-        .select("vec_id", "dv", "dn", "skey")
-    )
-    probes = (
-        cells.select(
-            F.col("id").alias("q_id"), F.col("v").alias("qv"),
-            F.col("vn").alias("qn"), F.explode("probes").alias("cell"),
-        )
-        .join(F.broadcast(subbook), "cell", "left")
-        .withColumn(
-            "_skeys",
-            F.when(F.col("subs").isNull(), F.array(cell_str)).otherwise(
-                F.transform(
-                    F.slice(ranked_subs("qv", "qn"), 1, nprobe_sub),
-                    lambda s: F.concat_ws("#", cell_str, s["sub_id"].cast("string")),
-                )
-            ),
-        )
-        .select("q_id", "qv", "qn", F.explode("_skeys").alias("skey"))
-    )
-    return data, probes
+    subs = _sub_codebooks(members.join(F.broadcast(hot), "cell"), n_sub)
+    return _with_skey(members, subs), _probe_skeys(cells, subs, nprobe_sub)
 
 
 def ann_topk_ivf_split(
@@ -957,26 +990,6 @@ def ann_topk_ivf_split(
     gracefully via nprobe_sub (instead of the cap's hard member drop).
     `max_cell` still applies per refined key as the last-resort guard for
     sub-split-resistant (identical-vector) degeneracy."""
-    from pyspark.sql import Window
-
     cells = ivf_cells(emb, n_cells, nprobe, id_col, vec_col, centroids=centroids)
     data, qs = ivf_split_hot_cells(cells, split_threshold, n_sub, nprobe_sub)
-    if max_cell is not None:
-        wc = Window.partitionBy("skey").orderBy(
-            F.md5(F.concat_ws(":", F.lit("ivf"), F.col("vec_id").cast("string"))).asc(),
-            F.col("vec_id").asc(),
-        )
-        data = (
-            data.withColumn("_mrk", F.row_number().over(wc))
-            .filter(F.col("_mrk") <= max_cell)
-            .drop("_mrk")
-        )
-    cand = qs.join(data, "skey").filter(F.col("q_id") != F.col("vec_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "dv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    scored = cand.select(
-        "q_id", "vec_id", F.round(dot / (F.col("qn") * F.col("dn")), 6).alias("cosine")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    return _ivf_topk(qs, data, "skey", k, max_cell)

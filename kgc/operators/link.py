@@ -100,29 +100,7 @@ def link_mentions(
     is bit-identical either way (pinned in tests/test_plans.py +
     test_ops_core.py)."""
     m = mentions_long.withColumn("surface_key", normalize_surface("surface"))
-    # --- vocabulary resolution (tiny) ----------------------------------
-    vocab = m.select("role", "surface_key").distinct().withColumn(
-        "bkey", block_key(F.col("surface_key"))
-    )
-    cat = catalog.withColumn("bkey", block_key(F.col("surface_key")))
-    cands = vocab.join(
-        F.broadcast(cat),
-        (vocab["bkey"] == cat["bkey"]) & (vocab["role"] == cat["entity_type"]),
-        "inner",
-    ).select(
-        vocab["role"], vocab["surface_key"],
-        cat["surface_key"].alias("cand_key"), cat["entity_id"],
-    )
-    scored = cands.withColumn(
-        "link_score", score_links_udf(F.col("surface_key"), F.col("cand_key"))
-    ).filter(F.col("link_score") >= LINK_THRESHOLD)
-    # argmax with pinned tie-break (score DESC, entity_id ASC):
-    # lexicographic min of struct(-score, entity_id)
-    resolution = (
-        scored.groupBy("role", "surface_key")
-        .agg(F.min(F.struct((-F.col("link_score")).alias("ns"), F.col("entity_id").alias("e"))).alias("b"))
-        .select("role", "surface_key", F.col("b.e").alias("entity_id"), (-F.col("b.ns")).alias("link_score"))
-    )
+    resolution = link_resolution_dim(mentions_long, catalog)
     # --- stream rewrite (one broadcast hash join; sort-merge fallback) --
     if broadcast_resolution:
         joined = m.join(F.broadcast(resolution), ["role", "surface_key"])

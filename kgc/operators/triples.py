@@ -63,14 +63,6 @@ def assemble_triples(linked: DataFrame) -> DataFrame:
     )
 
 
-def union_triples(*parts: DataFrame) -> DataFrame:
-    """op-36: merge extractor outputs."""
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
 def canonical_rewrite(triples_raw: DataFrame, entities_canon: DataFrame) -> DataFrame:
     """The stateless half of canonical_triples: broadcast alias→canonical
     rewrite only, NO dedup — safe on a streaming DataFrame (the MERGE dedup

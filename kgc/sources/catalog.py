@@ -26,8 +26,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgc.schemas import DOCS
-
 N_BUCKETS_DEFAULT = 32  # cluster target: 256 (documented, conf-driven)
 
 
@@ -37,12 +35,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def read_documents(spark: SparkSession, path: str) -> DataFrame:
-    """op-01: schema-checked load of the interleaved-doc table."""
-    df = spark.read.schema(DOCS).parquet(path)
-    return df
 
 
 def bucket_col(col: str, n_buckets: int) -> F.Column:

@@ -48,14 +48,11 @@ from pyspark.sql import functions as F
 
 from kgc.operators.ann_index import (
     _dirs,
-    _with_skey,
+    _index_rows,
+    _read_data_raw,
     ivf_index_maintain,
     ivf_index_query,
-    read_index_codebook,
-    read_index_data,
-    read_index_subbooks,
 )
-from kgc.operators.dedup import ivf_assign
 
 _DELTA_SCHEMA = "batch_id long, vec_id long, dv array<double>, dn double, skey string"
 
@@ -89,7 +86,7 @@ def _merge_flushing_into_data(spark: SparkSession, path: str) -> int:
     touched = [r["skey"] for r in delta.select("skey").distinct().collect()]
     if not touched:
         return 0
-    existing = read_index_data(spark, path).filter(F.col("skey").isin(touched))
+    existing = _read_data_raw(spark, path).filter(F.col("skey").isin(touched))
     merged = (
         existing.unionByName(delta)
         .dropDuplicates(["vec_id"])
@@ -132,13 +129,9 @@ def _ingest_batch(
     """Assign one micro-batch against the stored codebook + sub-codebooks
     and append to the delta log. Pure in (index state, batch rows), so a
     replayed batch appends byte-identical rows."""
-    cb = read_index_codebook(spark, path)
-    assigned = ivf_assign(batch_df, cb, nprobe=1, id_col=id_col, vec_col=vec_col).select(
-        F.col("id").alias("vec_id"), F.col("v").alias("dv"), F.col("vn").alias("dn"), "cell"
-    )
-    rows = _with_skey(assigned, read_index_subbooks(spark, path))
     (
-        rows.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        _index_rows(spark, path, batch_df, id_col, vec_col)
+        .withColumn("batch_id", F.lit(batch_id).cast("long"))
         .select("batch_id", "vec_id", "dv", "dn", "skey")
         .write.mode("append")
         .parquet(_delta_dir(path))

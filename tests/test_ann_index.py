@@ -140,8 +140,9 @@ class TestIncrementalIvf:
         """r6 (ADVICE r5): a crash between maintain's dynamic partition
         overwrite and its stale-dir sweep leaves a hot cell's rows in BOTH
         the bare 'skey=<cell>' dir and the new 'skey=<cell>#<sub>' dirs.
-        The `_maintaining` marker + dedup-first rewrite must heal that
-        layout — from the read path AND from a re-run of maintain."""
+        Reads must refuse that layout while the `_maintaining` marker is
+        present (never heal it themselves), and a re-run of maintain must
+        heal it through the dedup-first rewrite."""
         import json
         import os
         import shutil
@@ -151,45 +152,35 @@ class TestIncrementalIvf:
         cents = _centroids(spark)
         emb = skewed_corpus(spark, 300).localCheckpoint(eager=True)
 
-        def fresh(name):
-            p = str(tmp_path / name)
-            ivf_index_build(emb, p, centroids=cents)
-            return p
-
-        clean = fresh("clean")
+        clean = str(tmp_path / "clean")
+        ivf_index_build(emb, clean, centroids=cents)
         split = ivf_index_maintain(spark, clean, self.THRESH, self.N_SUB)
         assert split, "corpus must plant a hot cell"
         hot = split[0]
         want = _rows(read_index_data(spark, clean))
         want_subs = _rows(read_index_subbooks(spark, clean))
 
-        def crashed(name):
-            """Final post-maintain layout PLUS the resurrected pre-sweep
-            bare dir of the hot cell (duplicate rows) and the marker."""
-            p = fresh(name)
-            pre_hot = os.path.join(str(tmp_path / f"{name}_prehot"))
-            shutil.copytree(
-                os.path.join(p, "data", f"skey={hot}"), pre_hot
-            )
-            ivf_index_maintain(spark, p, self.THRESH, self.N_SUB)
-            shutil.copytree(pre_hot, os.path.join(p, "data", f"skey={hot}"))
-            with open(_maintain_marker(p), "w") as f:
-                json.dump({"cells": [hot], "n_sub": self.N_SUB}, f)
-            return p
+        # the final post-maintain layout PLUS the resurrected pre-sweep
+        # bare dir of the hot cell (duplicate rows) and the marker
+        a = str(tmp_path / "crash")
+        ivf_index_build(emb, a, centroids=cents)
+        pre_hot = str(tmp_path / "crash_prehot")
+        shutil.copytree(os.path.join(a, "data", f"skey={hot}"), pre_hot)
+        ivf_index_maintain(spark, a, self.THRESH, self.N_SUB)
+        shutil.copytree(pre_hot, os.path.join(a, "data", f"skey={hot}"))
+        with open(_maintain_marker(a), "w") as f:
+            json.dump({"cells": [hot], "n_sub": self.N_SUB}, f)
 
-        # heal on READ: read_index_data triggers recovery
-        a = crashed("crash_a")
+        # READ refuses and mutates nothing; a re-run of maintain heals
+        with pytest.raises(ValueError, match="ivf_index_maintain"):
+            read_index_data(spark, a)
+        assert os.path.exists(_maintain_marker(a))
+        ivf_index_maintain(spark, a, self.THRESH, self.N_SUB)
         data_a = read_index_data(spark, a)
         assert _rows(data_a) == want
         assert data_a.count() == data_a.select("vec_id").distinct().count()
         assert not os.path.exists(_maintain_marker(a))
         assert _rows(read_index_subbooks(spark, a)) == want_subs
-
-        # heal on RE-RUN: maintain recovers first, then finds nothing new
-        b = crashed("crash_b")
-        ivf_index_maintain(spark, b, self.THRESH, self.N_SUB)
-        assert _rows(read_index_data(spark, b)) == want
-        assert not os.path.exists(_maintain_marker(b))
 
     def test_maintain_refuses_unflushed_delta(self, spark, tmp_path):
         """r6 (ADVICE r5): maintain must refuse while the streaming delta
@@ -206,6 +197,73 @@ class TestIncrementalIvf:
             ivf_index_maintain(spark, path, self.THRESH, self.N_SUB)
         ivf_index_flush(spark, path)
         ivf_index_maintain(spark, path, self.THRESH, self.N_SUB)  # now fine
+
+    @pytest.mark.parametrize(
+        "nprobe,nprobe_sub,max_cell", [(2, 3, 256), (1, 4, None), (3, 2, 20)]
+    )
+    def test_split_operator_equals_stored_index(
+        self, spark, tmp_path, nprobe, nprobe_sub, max_cell
+    ):
+        """The query-time hot-cell split (ann_topk_ivf_split) and the stored
+        index (build → maintain → query) are one IVF computation: same
+        sub-codebook, same refined keys, same search — equal row for row on
+        the planted hot cell."""
+        from kgc.operators.dedup import ann_topk_ivf_split
+
+        cents = _centroids(spark)
+        emb = skewed_corpus(spark, 300).localCheckpoint(eager=True)
+        path = str(tmp_path / "idx")
+        ivf_index_build(emb, path, centroids=cents)
+        assert ivf_index_maintain(spark, path, self.THRESH, self.N_SUB) != []
+        got = _rows(ivf_index_query(
+            spark, path, k=5, nprobe=nprobe, nprobe_sub=nprobe_sub, max_cell=max_cell,
+        ))
+        want = _rows(ann_topk_ivf_split(
+            emb, k=5, nprobe=nprobe, split_threshold=self.THRESH, n_sub=self.N_SUB,
+            nprobe_sub=nprobe_sub, centroids=cents, max_cell=max_cell,
+        ))
+        assert got == want and len(want) > 0
+
+    def test_refused_maintain_leaves_index_untouched(self, spark, tmp_path):
+        """A maintain marker left by a crash before any mutation, then
+        un-flushed streaming rows: maintain must refuse WITHOUT running the
+        recovery rewrite (a rewrite now would split the cell, and the flush
+        would then resurrect a bare 'skey=<cell>' dir that split-cell
+        probes never read). Reads refuse while the marker is present; the
+        next maintain heals to the clean batch build."""
+        import json
+        import os
+
+        from kgc.operators.ann_index import _maintain_marker, _read_data_raw
+        from kgc.streaming.ann_index import _ingest_batch, ivf_index_flush
+
+        cents = _centroids(spark)
+        emb = skewed_corpus(spark, 300).localCheckpoint(eager=True)
+        clean = str(tmp_path / "clean")
+        ivf_index_build(emb, clean, centroids=cents)
+        split = ivf_index_maintain(spark, clean, self.THRESH, self.N_SUB)
+        assert split, "corpus must plant a hot cell"
+        want = _rows(read_index_data(spark, clean))
+        want_subs = _rows(read_index_subbooks(spark, clean))
+
+        path = str(tmp_path / "idx")
+        ivf_index_build(emb.filter(F.col("vec_id") < 200), path, centroids=cents)
+        before = _rows(_read_data_raw(spark, path))
+        with open(_maintain_marker(path), "w") as f:
+            json.dump({"cells": [split[0]], "n_sub": self.N_SUB}, f)
+        _ingest_batch(spark, emb.filter(F.col("vec_id") >= 200), 0, path)
+        with pytest.raises(ValueError, match="un-flushed"):
+            ivf_index_maintain(spark, path, self.THRESH, self.N_SUB)
+        assert os.path.exists(_maintain_marker(path)), "refusal must not run the rewrite"
+        assert _rows(_read_data_raw(spark, path)) == before
+
+        ivf_index_flush(spark, path)
+        with pytest.raises(ValueError, match="ivf_index_maintain"):
+            ivf_index_query(spark, path, k=5, nprobe=2)
+        ivf_index_maintain(spark, path, self.THRESH, self.N_SUB)
+        assert not os.path.exists(_maintain_marker(path))
+        assert _rows(read_index_data(spark, path)) == want
+        assert _rows(read_index_subbooks(spark, path)) == want_subs
 
     def test_external_query_batch(self, spark, tmp_path):
         """Queries that are NOT in the index probe it without being
